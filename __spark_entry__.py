@@ -601,7 +601,6 @@ def q17_minhash_near_dups(spark, sf_dir):
         num_hashes=_MH_H,
         bands=_MH_BANDS,
         jaccard_threshold=_MH_THRESH,
-        shingle_mode="word",
         ngram_n=_MH_N,
     )
 
@@ -742,8 +741,8 @@ LIMIT 10
 # for ANY LSH family (rho~0.67) — at 100 TB, low-threshold similarity
 # search belongs on IVF (similarity.ivf_topk / q23); this banded
 # instance exercises the fat-bucket GEMM path, whose per-task memory
-# is now BOUNDED by the operator's chunk_cap hot-bucket split
-# (default 32768 vectors/task), so a skewed bucket can no longer
+# is now BOUNDED by the operator's hot-bucket chunk split
+# (dedup._CHUNK_CAP = 32768 vectors/group), so a skewed bucket can no longer
 # exceed executor memory.  The sub-quadratic banded regime (r=12,
 # threshold 0.9) is demonstrated hash-exactly by q20b below.
 # ---------------------------------------------------------------------------
@@ -864,17 +863,12 @@ def q20b_embedding_near_dups_hi(spark, sf_dir):
             F.array(F.col("v")[0] + F.lit(0.2)), F.slice("v", 2, _EMB_DIM)
         ).alias("v"),
     )
-    # verify="pairs": at r=12 the band buckets are mostly singletons,
-    # so candidate volume is already sub-quadratic and per-pair JVM
-    # verification beats paying Arrow per-group overhead on thousands
-    # of one-vector groups (see _banded_embedding_near_dups docstring)
     return D.embedding_near_dups(
         base.unionByName(pert),
         vec_col="v",
         key_col="vec_id",
         threshold=_COS_HI,
         plane_bands=_HP_BANDS_HI,
-        verify="pairs",
     )
 
 

@@ -8,12 +8,15 @@ Five strategies, cheapest to fuzziest, each as DataFrame -> DataFrame:
   simhash_pairs      per-token portable hash -> bit-vote simhash ->
                      hamming-distance pairs
   ngram_jaccard_pairs word n-gram candidate generation + exact Jaccard
-  embedding_near_dups cosine-similarity pairs over embedding vectors
+  embedding_near_dups cosine-similarity pairs over embedding vectors:
+                     block column or banded sign-LSH buckets, one
+                     grouped GEMM verify per bucket
 
-Scale notes (100 TB design point): every strategy generates candidates
-with an EQUI-join (band bucket / shared n-gram / LSH bucket), never an
-all-pairs cross join; all hashes are computed with JVM-side expressions
-(md5 / polynomial rolling hash) so signatures parallelize map-side, and
+Scale notes (100 TB design point): every text strategy generates
+candidates with an EQUI-join (band bucket / shared n-gram), and the
+embedding strategy groups by bucket — never an all-pairs cross join;
+all text hashes are computed with JVM-side expressions (md5 /
+polynomial rolling hash) so signatures parallelize map-side, and
 verification runs only on the candidate set. Hash functions are chosen
 to be expressible in ANSI SQL so every operator has a DuckDB oracle
 (md5 hex strings compared lexicographically; integer rolling hashes).
@@ -435,16 +438,15 @@ def minhash_lsh_pairs(
     df: DataFrame,
     content_col: str = "text",
     key_col: str = "doc_id",
-    shingle_k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    shingle_mode: str = "word",
     ngram_n: int = 3,
     engine: str = "arrow",
     base: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-duplicate pairs via MinHash + LSH banding.
+    """Near-duplicate pairs via MinHash + LSH banding over word
+    ``ngram_n``-gram shingles.
 
     Plan shape (each step matters at 100 TB):
       * shingle/signature computation is one map pass, persisted so the
@@ -455,16 +457,14 @@ def minhash_lsh_pairs(
       * candidates come from an equi-join on the band bucket, deduped,
         then verified by exact Jaccard via two narrow key joins.
 
-    shingle_mode='word' (n-gram) is the scale default: char shingles
-    over a small vocabulary give every doc pair high baseline Jaccard,
-    which floods the LSH buckets with candidates (the classic
-    stop-gram problem); word n-grams keep unrelated docs out of each
-    other's buckets. shingle_mode='char' remains for short-string
-    workloads. engine='arrow' (word mode only) computes the shingle +
-    signature base frame in one Arrow mapInPandas pass —
-    bit-identical output, several times faster than the interpreted
-    higher-order-function path, which remains as engine='sql' and is
-    cross-checked against the Arrow path by property tests. Returns
+    Word n-grams, not char shingles: char shingles over a small
+    vocabulary give every doc pair a high baseline Jaccard, which
+    floods the LSH buckets with candidates (the classic stop-gram
+    problem). engine='arrow' computes the shingle + signature base
+    frame in one Arrow mapInPandas pass — bit-identical output,
+    several times faster than the interpreted higher-order-function
+    path, which remains as engine='sql' and is cross-checked against
+    the Arrow path by property tests. Returns
     (key_a, key_b, jaccard), key_a < key_b.
     """
     # barrier carries RAW text: tokenization + shingling + signatures
@@ -478,7 +478,7 @@ def minhash_lsh_pairs(
             base, num_hashes, bands, jaccard_threshold
         )
         return _with_cached_deps(verified, base)
-    use_arrow = shingle_mode == "word" and engine == "arrow"
+    use_arrow = engine == "arrow"
     pre = rebalance_for_cpu(
         df.select(F.col(key_col).alias("k"), F.col(content_col).alias("txt")),
         persist=not use_arrow,
@@ -493,17 +493,10 @@ def minhash_lsh_pairs(
     if use_arrow:
         base = _minhash_base_arrow(pre, ngram_n, num_hashes).persist()
     else:
-        if shingle_mode == "word":
-            shingled = pre.select(
-                "k",
-                X.word_ngrams_from_tokens(
-                    X.lower_tokens("txt"), ngram_n
-                ).alias("sh"),
-            )
-        else:
-            shingled = pre.select(
-                "k", X.char_shingles("txt", shingle_k).alias("sh")
-            )
+        shingled = pre.select(
+            "k",
+            X.word_ngrams_from_tokens(X.lower_tokens("txt"), ngram_n).alias("sh"),
+        )
         base = (
             shingled.where(F.size("sh") > 0)
             .select("k", "sh", *minhash_signature(F.col("sh"), num_hashes))
@@ -808,202 +801,147 @@ def ngram_jaccard_pairs(
     return _with_cached_deps(out, grams, exploded, pre)
 
 
-def _banded_embedding_near_dups(
+# A verify group holding more vectors than this is hash-split into
+# chunk-pair groups (see _grouped_embedding_near_dups), bounding each
+# applyInPandas group to ~2 * _CHUNK_CAP vectors however skewed the
+# bucket.
+_CHUNK_CAP = 32768
+# Row-count ceiling of the opt-in all-pairs driver gather.
+_MAX_GATHER_ROWS = 2_000_000
+
+
+def _min_partition_bytes(spark) -> int:
+    """The session's spark.sql.adaptive.coalescePartitions.
+    minPartitionSize in bytes, parsed by Spark's own byte-string
+    parser (the conf accepts "1MB", "512k", plain byte counts...)."""
+    raw = spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB"
+    )
+    jutils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    return int(jutils.byteStringAsBytes(raw))
+
+
+def _grouped_embedding_near_dups(
     df: DataFrame,
     vec_col: str,
     key_col: str,
     threshold: float,
-    plane_bands: list[list[list[float]]],
-    chunk_cap: int | None = 32768,
-    verify: str = "group",
+    block_col: str | None,
+    plane_bands: list[list[list[float]]] | None,
 ) -> DataFrame:
-    """OR-amplified banded sign-LSH candidate generation: each of the B
-    independent plane sets buckets every vector ("band#code"), and
-    verification runs GROUP-LOCALLY inside each band bucket (one GEMM
-    per bucket emits only the pairs that clear the threshold) — there
-    is no pair self-join and no pair-level dropDuplicates before
-    verification; the cross-band dedup runs on the tiny surviving set.
+    """Blocked near-dup pairs, verified GROUP-LOCALLY: every row lands
+    in one or more buckets and one GEMM per bucket emits only the pairs
+    that clear the threshold — no pair self-join, and vectors ship once
+    per bucket, never once per candidate pair.
 
-    Scale shape: each vector ships once per band as a (key, vector,
-    bucket) row — never once per candidate pair — and in-bucket work is
-    quadratic in BUCKET occupancy, which r (planes per band) tunes:
-    high thresholds (0.9+) support r >= 12 (2^12 bucket values,
-    sub-quadratic); low thresholds are intrinsically near-quadratic for
-    ANY LSH family (rho ~ 0.67 at cosine 0.4) and IVF (similarity.py)
-    is the better tool there.
+    The bucket is the ``block_col`` value (one bucket per row, e.g. an
+    IVF cell id) or, for ``plane_bands``, one "band#code" sign-LSH
+    bucket per band (OR-amplification: a pair is found if it shares ANY
+    band's bucket; the cross-band dedup runs on the tiny verified set).
 
-    ``chunk_cap`` bounds PER-TASK memory on hot buckets: a bucket with
-    occupancy b > chunk_cap is hash-split into K = ceil(b/chunk_cap)
-    chunks and verified as K*(K+1)/2 chunk-pair groups, each holding at
-    most ~2*chunk_cap vectors — same emitted pairs exactly (every
-    (a, b) pair lands in precisely the group of its own chunk pair),
-    ~2x the flops on split buckets only, and no single applyInPandas
-    group can exceed ~2*chunk_cap*dim*8 bytes however skewed the
-    bucket. None disables splitting (single group per bucket).
+    Scale shape: in-bucket work is quadratic in BUCKET occupancy, which
+    r (planes per band) or the block granularity tunes: high thresholds
+    (0.9+) support r >= 12 (2^12 bucket values, sub-quadratic); low
+    thresholds are intrinsically near-quadratic for ANY LSH family
+    (rho ~ 0.67 at cosine 0.4) and IVF (similarity.py) is the better
+    tool there.
 
-    ``verify`` picks the verification physical shape — both emit the
-    SAME pairs:
-      * "group" (default): per-bucket GEMM via applyInPandas. Wins when
-        buckets are FAT (small r): one matrix multiply replaces ~b^2/2
-        per-pair dots and vectors never ship per-candidate.
-      * "pairs": narrow (key, bucket) self-join -> distinct candidate
-        pairs -> JVM zip_with dot per pair. Wins when buckets are TINY
-        (r >= ~10): with mostly-singleton buckets the group path pays
-        per-group Arrow/pandas overhead for groups that cannot emit a
-        pair, while candidate volume ~B*N^2/2^r is already sub-
-        quadratic, so per-pair verification is cheap and stays fully
-        JVM-side. NOTE: ``chunk_cap`` does not apply here — the pairs
-        path has no grouped-materialization step to bound (its memory
-        shape is ordinary join spill), so the cap is a group-path
-        knob only.
+    Hot buckets: a bucket with occupancy b > _CHUNK_CAP is hash-split
+    into K = ceil(b/_CHUNK_CAP) chunks and verified as K*(K+1)/2
+    chunk-pair groups, each holding at most ~2*_CHUNK_CAP vectors —
+    same emitted pairs exactly (every (a, b) pair lands in precisely
+    the group of its own chunk pair), ~2x the flops on split buckets
+    only.
+
+    Rows with a NULL vector or NULL block value, zero-norm vectors and
+    vectors with NULL elements have an undefined cosine or no bucket
+    and emit no pair. They are dropped inside the Python kernels, not
+    by a Spark filter: Catalyst would push an IS NOT NULL filter below
+    the caller's projection and evaluate a computed vector or block
+    column (e.g. semdedup's cell assignment) twice.
     """
     import numpy as np
     import pandas as pd
 
-    if verify not in ("group", "pairs"):
-        raise ValueError(
-            f"verify must be 'group' or 'pairs', got {verify!r}"
+    # The STORED vector type ships (float32 for the embeddings corpus):
+    # every consumer of `v` is a NumPy kernel that widens to float64
+    # itself (np.float64(float32) is exact), so a JVM-side cast would
+    # only double the bytes of the bucket shuffle — the operator's
+    # dominant byte mover.
+    if block_col is not None:
+        banded = df.select(
+            F.col(key_col).alias("k"),
+            F.col(vec_col).alias("v"),
+            F.col(block_col).alias("bucket"),
         )
-
-    # verify="group" ships the STORED vector type (float32 for the
-    # embeddings corpus): every consumer of `v` on that path is a
-    # NumPy kernel that widens to float64 itself (np.float64(float32)
-    # is exact, the same doubles the JVM cast produced), so the
-    # interpreted per-element cast bought nothing and doubled the
-    # bytes of the banded explode's shuffle — the operator's dominant
-    # byte mover (r17, guide §2.3 "narrower types"). verify="pairs"
-    # keeps the JVM-side double cast: its zip_with dot runs in the
-    # JVM, where float accumulation would diverge from the oracle.
-    if verify == "pairs":
-        vec_in = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     else:
-        vec_in = F.col(vec_col)
-    # rebalance: a single parquet file plans as one partition, which
-    # would serialize the bucket/verify kernels onto one core
-    base = rebalance_for_cpu(
-        df.select(F.col(key_col).alias("k"), vec_in.alias("v")), persist=False
-    )
-
-    # Bucket computation is one (batch x dim) @ (dim x B*r) GEMM per
-    # Arrow batch instead of B*r interpreted zip_with/aggregate dots
-    # per ROW (measured ~44 ms/row at B=12, r=4, dim=64 — interpreted
-    # HOF eval re-builds the 64-literal plane array per evaluation).
-    # Sign decisions agree with the oracle's list_dot_product up to
-    # summation-order ulps; a Gaussian plane dot sits ~|sqrt(dim)| from
-    # zero, so a flipped sign needs |dot| within an ulp of 0 (~1e-13
-    # odds per dot) — the same fp-consistency budget the brute-force
-    # BLAS path has carried since r1.
-    n_bands, r_planes = len(plane_bands), len(plane_bands[0])
-    plane_mat = np.array(
-        [p for band in plane_bands for p in band], dtype=np.float64
-    )  # (B*r, dim)
-    bit_weights = 1 << np.arange(r_planes)
-
-    def _buckets_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        M = np.array(list(vs), dtype=np.float64)
-        signs = (M @ plane_mat.T >= 0).reshape(len(M), n_bands, r_planes)
-        codes = signs @ bit_weights  # (n, B)
-        return pd.Series(
-            [[f"{b}#{int(c)}" for b, c in enumerate(row)] for row in codes]
+        # rebalance: a single parquet file plans as one partition, which
+        # would serialize the bucket GEMM kernel onto one core
+        base = rebalance_for_cpu(
+            df.select(F.col(key_col).alias("k"), F.col(vec_col).alias("v")),
+            persist=False,
         )
+        # Bucket computation is one (batch x dim) @ (dim x B*r) GEMM per
+        # Arrow batch instead of B*r interpreted zip_with/aggregate dots
+        # per ROW (measured ~44 ms/row at B=12, r=4, dim=64 — interpreted
+        # HOF eval re-builds the 64-literal plane array per evaluation).
+        # Sign decisions agree with the oracle's list_dot_product up to
+        # summation-order ulps; a Gaussian plane dot sits ~|sqrt(dim)|
+        # from zero, so a flipped sign needs |dot| within an ulp of 0
+        # (~1e-13 odds per dot).
+        n_bands, r_planes = len(plane_bands), len(plane_bands[0])
+        plane_mat = np.array(
+            [p for band in plane_bands for p in band], dtype=np.float64
+        )  # (B*r, dim)
+        bit_weights = 1 << np.arange(r_planes)
 
-    _buckets_fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    _buckets = F.pandas_udf(_buckets_fn, "array<string>")
+        def _buckets_fn(vs):
+            # a NULL vector gets a NULL bucket list, which explode drops
+            live = vs.notna().to_numpy()
+            out = [None] * len(vs)
+            if live.any():
+                M = np.array(list(vs[live]), dtype=np.float64)
+                signs = (M @ plane_mat.T >= 0).reshape(len(M), n_bands, r_planes)
+                codes = signs @ bit_weights  # (n, B)
+                for i, row in zip(np.flatnonzero(live), codes):
+                    out[i] = [f"{b}#{int(c)}" for b, c in enumerate(row)]
+            return pd.Series(out, dtype=object)
 
-    if verify == "pairs":
-        from ..functions import vectors as V
-
-        # base feeds the (narrow) band explode AND the two vector-side
-        # verification joins — persist so the scan+cast runs once
-        base = base.persist()
-        narrow = base.select("k", F.explode(_buckets("v")).alias("bucket"))
-        # same shared key_a exchange as _minhash_verify_pairs (r17):
-        # the pair dedup and the key_a vector join ride one shuffle
-        cand = (
-            narrow.select(F.col("k").alias("key_a"), "bucket")
-            .join(narrow.select(F.col("k").alias("key_b"), "bucket"), "bucket")
-            .where(F.col("key_a") < F.col("key_b"))
-            .select("key_a", "key_b")
-            .repartition(F.col("key_a"))
-            .dropDuplicates(["key_a", "key_b"])
-        )
-        vecs = base.select("k", "v", V.norm(F.col("v")).alias("nrm"))
-        joined = cand.join(
-            vecs.select(
-                F.col("k").alias("key_a"),
-                F.col("v").alias("v_a"),
-                F.col("nrm").alias("n_a"),
-            ),
-            "key_a",
-        ).join(
-            vecs.select(
-                F.col("k").alias("key_b"),
-                F.col("v").alias("v_b"),
-                F.col("nrm").alias("n_b"),
-            ),
-            "key_b",
-        )
-        dot = F.aggregate(
-            F.zip_with("v_a", "v_b", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        out = (
-            joined.withColumn(
-                "cosine", F.round(dot / (F.col("n_a") * F.col("n_b")), 6)
-            )
-            .where(F.col("cosine") >= threshold)
-            .select("key_a", "key_b", "cosine")
-        )
-        return _with_cached_deps(out, base)
-
-    banded = base.select("k", "v", F.explode(_buckets("v")).alias("bucket"))
+        _buckets_fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
+        _buckets = F.pandas_udf(_buckets_fn, "array<string>")
+        banded = base.select("k", "v", F.explode(_buckets("v")).alias("bucket"))
 
     cached: list[DataFrame] = []
-    if chunk_cap is not None and df.count() <= chunk_cap:
-        # A bucket can never hold more rows than the corpus: when the
-        # WHOLE input fits under the cap, the memory bound holds
-        # trivially and the split machinery (cache + occupancy pass)
-        # would be pure overhead. The count is one cheap column-less
-        # scan job, paid only when chunk_cap is armed; at 100 TB the
-        # corpus exceeds any sane cap and this gate falls through.
-        chunk_cap = None
-    if chunk_cap is not None:
-        # Hot-bucket split: persist the exploded (key, vector, bucket)
-        # frame ONCE (MEMORY_AND_DISK — its byte volume is the same
-        # N*B vector rows the verify groupBy is about to shuffle, so
-        # the spillable cache costs one extra shuffle-sized write, not
-        # a new asymptotic term; recomputing instead would run the
+    grouped = None
+    # A bucket can never hold more rows than the corpus: when the WHOLE
+    # input fits under the cap, the memory bound holds trivially and the
+    # split machinery (cache + occupancy pass) would be pure overhead.
+    # The count is one cheap column-less scan job; at 100 TB the corpus
+    # exceeds any sane cap and this gate falls through.
+    if df.count() > _CHUNK_CAP:
+        # Hot-bucket split: persist the (key, vector, bucket) frame ONCE
+        # (MEMORY_AND_DISK — its byte volume is the same rows the verify
+        # groupBy is about to shuffle, so the spillable cache costs one
+        # extra shuffle-sized write; recomputing instead would run the
         # bucket GEMM stage twice, measured +0.9 s at sf0.1), count
-        # band-bucket occupancy from it, and check the max. The max is
-        # ONE scalar (bounded driver action, same class as the IVF
-        # centroid collect): when no bucket exceeds the cap — every
+        # bucket occupancy from it, and check the max. The max is ONE
+        # scalar: when no bucket exceeds the cap — every
         # non-adversarial corpus — the split machinery short-circuits
-        # to literal group columns with NO join and NO explode, so the
-        # unskewed path pays only the cache materialization.
+        # to literal group columns with NO join and NO explode.
         from pyspark import StorageLevel
 
         banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
         cached.append(banded)
-        sizes = (
-            banded.select("bucket")
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-        )
+        sizes = banded.groupBy("bucket").agg(F.count(F.lit(1)).alias("__bn"))
         max_occ = sizes.agg(F.max("__bn")).first()[0]
-        if max_occ is not None and max_occ > chunk_cap:
-            # Broadcast the tiny size table back (#buckets <= B * 2^r
-            # rows) and explode each hot bucket's rows to its
-            # chunk-pair groups. K = 1 for every bucket under the cap,
-            # so only skewed buckets replicate.
-            k_col = F.ceil(F.col("__bn") / F.lit(chunk_cap)).cast("int")
+        if max_occ is not None and max_occ > _CHUNK_CAP:
+            # Broadcast the small size table back and explode each hot
+            # bucket's rows to its chunk-pair groups. K = 1 for every
+            # bucket under the cap, so only skewed buckets replicate.
+            k_col = F.ceil(F.col("__bn") / F.lit(_CHUNK_CAP)).cast("int")
             grouped = (
                 banded.join(F.broadcast(sizes), "bucket")
-                .withColumn(
-                    "__ci", F.pmod(F.xxhash64("k"), k_col).cast("int")
-                )
+                .withColumn("__ci", F.pmod(F.xxhash64("k"), k_col).cast("int"))
                 .select(
                     "k",
                     "v",
@@ -1028,16 +966,7 @@ def _banded_embedding_near_dups(
                     F.col("__g.j").alias("__gj"),
                 )
             )
-        else:
-            grouped = banded.select(
-                "k",
-                "v",
-                "bucket",
-                F.lit(0).alias("__ci"),
-                F.lit(0).alias("__gi"),
-                F.lit(0).alias("__gj"),
-            )
-    else:
+    if grouped is None:
         grouped = banded.select(
             "k",
             "v",
@@ -1047,36 +976,39 @@ def _banded_embedding_near_dups(
             F.lit(0).alias("__gj"),
         )
 
-    # Verify INSIDE each (bucket, chunk-pair) group: one GEMM per group
-    # emits only the pairs that clear the threshold, so each vector
-    # ships once per band (times K on split buckets) instead of once
-    # per CANDIDATE PAIR — the pair-join formulation moved ~100x more
-    # bytes and needed a large dropDuplicates BEFORE verification; here
-    # the cross-band dedup runs on the tiny surviving pair set. A pair
-    # is scored only in the group matching its own (sorted) chunk pair,
-    # so split buckets emit each pair exactly once. np.round(...,6)
-    # absorbs GEMM-vs-sequential summation ulps (the brute-force path's
-    # oracle-match precedent since r1).
-    # key handling adapts to the frame's key type (the block_col and
-    # verify='pairs' paths already accept any orderable key; hardcoded
-    # int64 here crashed string-keyed corpora inside the worker)
+    # Verify INSIDE each (bucket, chunk-pair) group. A pair is scored
+    # only in the group matching its own (sorted) chunk pair, so split
+    # buckets emit each pair exactly once. np.round(...,6) absorbs
+    # GEMM-vs-sequential summation ulps against the oracles' exact
+    # cosine. Key handling adapts to the frame's key type (any
+    # orderable key: integral keys stay int64, others compare as
+    # Python objects).
     key_sql = banded.schema["k"].dataType.simpleString()
     key_integral = key_sql in ("bigint", "int", "smallint", "tinyint")
     key_np = "int64" if key_integral else "object"
 
+    no_pairs = pd.DataFrame({"key_a": [], "key_b": [], "cosine": []}).astype(
+        {"key_a": key_np, "key_b": key_np, "cosine": "float64"}
+    )
+
     def _bucket_pairs(pdf):
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"key_a": [], "key_b": [], "cosine": []}).astype(
-                {"key_a": key_np, "key_b": key_np, "cosine": "float64"}
-            )
+        # NULL block values group together but are no bucket; a NULL
+        # vector (block_col input) has no cosine
+        if len(pdf) < 2 or pd.isna(pdf["bucket"].iloc[0]):
+            return no_pairs
+        pdf = pdf[pdf["v"].notna()]
+        if len(pdf) < 2:
+            return no_pairs
         keys = pdf["k"].to_numpy(dtype=key_np)
         ci = pdf["__ci"].to_numpy(dtype=np.int64)
         gi = int(pdf["__gi"].iloc[0])
         gj = int(pdf["__gj"].iloc[0])
         M = np.array(list(pdf["v"]), dtype=np.float64)
         norms = np.sqrt((M * M).sum(axis=1))
-        sims = np.round((M @ M.T) / np.outer(norms, norms), 6)
+        # zero norms / NaN elements give NaN cosines, which fail the
+        # threshold test below: such vectors emit no pair
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = np.round((M @ M.T) / np.outer(norms, norms), 6)
         own_group = (np.minimum(ci[:, None], ci[None, :]) == gi) & (
             np.maximum(ci[:, None], ci[None, :]) == gj
         )
@@ -1087,27 +1019,32 @@ def _banded_embedding_near_dups(
             {"key_a": keys[ia], "key_b": keys[ib], "cosine": sims[ia, ib]}
         )
 
-    # The group-verify exchange is AQE-coalescible, and AQE's
-    # parallelism-first coalescing floors partitions at
-    # minPartitionSize (1 MB): a banded shuffle of a few MB gets
-    # bytes/1MB tasks — fewer than the machine has slots — for a
-    # GEMM-bound stage (r17: shipping float32 instead of float64
-    # halved the shuffle and thereby halved the stage's tasks).  Pin
-    # the exchange to the slot count exactly in that regime: above
-    # slots x 1 MB the condition is false and AQE keeps managing the
-    # exchange (at real volumes it provisions >= slots tasks itself);
-    # below the unit-test stats floor tiny plans stay untouched.
-    slots = df.sparkSession.sparkContext.defaultParallelism
+    # The verify exchange is AQE-coalescible, and AQE's parallelism-
+    # first coalescing floors partitions at minPartitionSize: a bucket
+    # shuffle of a few MB gets bytes/minPartitionSize tasks — fewer than
+    # the machine has slots — for a GEMM-bound stage. Pin the exchange
+    # to the slot count exactly in that regime: above slots x
+    # minPartitionSize the condition is false and AQE keeps managing
+    # the exchange; below the unit-test stats floor tiny plans stay
+    # untouched. Caveat: the plan-stats size underestimates the real
+    # shuffle volume (see rebalance_for_cpu), so the pin can stay armed
+    # somewhat past the true crossover — harmless, it only fixes the
+    # task count at the slot count.
+    spark = df.sparkSession
+    slots = spark.sparkContext.defaultParallelism
     if (
         _REBALANCE_MIN_STATS_BYTES
         < _plan_size_bytes(grouped)
-        < slots * (1 << 20)
+        < slots * _min_partition_bytes(spark)
     ):
         grouped = grouped.repartition(slots, "bucket", "__gi", "__gj")
     pairs = grouped.groupBy("bucket", "__gi", "__gj").applyInPandas(
         _bucket_pairs, f"key_a {key_sql}, key_b {key_sql}, cosine double"
     )
-    return _with_cached_deps(pairs.dropDuplicates(["key_a", "key_b"]), *cached)
+    if plane_bands is not None:
+        # a pair sharing several bands' buckets is emitted once per band
+        pairs = pairs.dropDuplicates(["key_a", "key_b"])
+    return _with_cached_deps(pairs, *cached)
 
 
 def embedding_near_dups(
@@ -1116,119 +1053,58 @@ def embedding_near_dups(
     key_col: str = "vec_id",
     threshold: float = 0.95,
     block_col: str | None = None,
-    planes: list[list[float]] | None = None,
     plane_bands: list[list[list[float]]] | None = None,
     allow_driver_gather: bool = False,
-    max_gather_rows: int = 2_000_000,
-    chunk_cap: int | None = 32768,
-    verify: str = "group",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (key_a, key_b, cosine)
-    with cosine >= threshold.
+    with cosine >= threshold, key_a < key_b.
 
-    The DEFAULT scale path is blocked candidate generation: pass either
-    ``block_col`` (a precomputed bucket column), ``planes`` (ONE set of
-    sign-LSH hyperplanes, see similarity.random_hyperplane_bucket), or
-    ``plane_bands`` (SEVERAL independent plane sets — OR-amplified
-    banded LSH: a pair is a candidate if it shares the bucket of ANY
-    band, recall 1-(1-p^r)^B for per-plane agreement p, r planes per
-    band, B bands). Candidate pairs come from an equi-join on the
-    bucket — never all-pairs, never a driver gather — and every
-    candidate is verified with the exact cosine, so blocking affects
-    RECALL only, never precision. The exact all-pairs scan
-    (broadcast-matrix BLAS) is gated behind ``allow_driver_gather=True``
-    plus a row-count guard: it collects every vector to the driver,
-    which is a deliberate "index fits in memory" baseline, not a
-    100 TB plan.
+    The scale path is blocked candidate generation: pass either
+    ``block_col`` (a precomputed bucket column, e.g. IVF cell ids) or
+    ``plane_bands`` (SEVERAL independent sign-LSH plane sets —
+    OR-amplified banded LSH: a pair is a candidate if it shares the
+    bucket of ANY band, recall 1-(1-p^r)^B for per-plane agreement p,
+    r planes per band, B bands). Both verify through the same grouped
+    per-bucket GEMM (:func:`_grouped_embedding_near_dups`) — never
+    all-pairs, never a driver gather — and every candidate is verified
+    with the exact cosine, so blocking affects RECALL only, never
+    precision.
+
+    The exact all-pairs scan (broadcast-matrix BLAS) is gated behind
+    ``allow_driver_gather=True`` plus a row-count guard
+    (``_MAX_GATHER_ROWS``): it collects every vector to the driver,
+    which is a deliberate "index fits in memory" baseline (and the
+    exact reference recall is measured against), not a 100 TB plan.
     """
-    from ..functions import vectors as V
-
-    if plane_bands is not None:
-        return _banded_embedding_near_dups(
-            df,
-            vec_col,
-            key_col,
-            threshold,
-            plane_bands,
-            chunk_cap=chunk_cap,
-            verify=verify,
+    if block_col is not None and plane_bands is not None:
+        raise ValueError("pass block_col or plane_bands, not both")
+    if block_col is not None or plane_bands is not None:
+        return _grouped_embedding_near_dups(
+            df, vec_col, key_col, threshold, block_col, plane_bands
         )
 
-    if planes is not None and block_col is None:
-        from .similarity import random_hyperplane_bucket
-
-        df = df.withColumn("__hp_bucket", random_hyperplane_bucket(vec_col, planes))
-        block_col = "__hp_bucket"
-
-    if block_col:
-        # Candidate sets are small post-blocking: per-ROW prep (cast to
-        # double[] once, precompute the L2 norm once), then ONE
-        # zip_with+aggregate dot per pair — fp-identical to V.cosine
-        # (same doubles, same sequential accumulation), JVM-side.
-        # The prep frame is computed ONCE and persisted; both join
-        # sides are renamed projections of the SAME cache — two
-        # unpersisted projections would run the cast/norm (and, via
-        # planes=, the whole bucket expression battery) twice over the
-        # corpus.  Caller releases (the caller-unpersists contract).
-        vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        prep = df.select(
-            F.col(key_col).alias("__key"),
-            vd.alias("__v"),
-            V.norm(vd).alias("__n"),
-            F.col(block_col),
-        ).persist()
-
-        def _side(suffix: str) -> DataFrame:
-            return prep.select(
-                F.col("__key").alias(f"key_{suffix}"),
-                F.col("__v").alias(f"v_{suffix}"),
-                F.col("__n").alias(f"n_{suffix}"),
-                F.col(block_col),
-            )
-
-        joined = _side("a").join(_side("b"), block_col)
-        dot = F.aggregate(
-            F.zip_with("v_a", "v_b", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        out = (
-            joined.where(F.col("key_a") < F.col("key_b"))
-            .withColumn(
-                "cosine", F.round(dot / (F.col("n_a") * F.col("n_b")), 6)
-            )
-            .where(F.col("cosine") >= threshold)
-            .select("key_a", "key_b", "cosine")
-        )
-        return _with_cached_deps(out, prep)
-
-    # All-pairs scan: interpreted HOF evaluation over |df|^2 pairs is
-    # the one hot loop built-in expressions genuinely can't carry (no
-    # codegen for higher-order functions), so this is the sanctioned
-    # Pandas-UDF case: broadcast the index side as a float64 matrix,
+    # All-pairs scan: broadcast the index side as a float64 matrix,
     # stream the probe side through mapInPandas, and let BLAS do
-    # A @ B.T in one fused pass per Arrow batch. Same formula as the
-    # HOF path (dot / (|a||b|), round 6dp, >= threshold); BLAS
-    # summation order differs only in final ulps, absorbed by the 6dp
-    # rounding. At scale the broadcast side is the "index fits in
-    # executor memory" brute-force baseline — beyond that, IVF
+    # A @ B.T in one fused pass per Arrow batch (dot / (|a||b|), round
+    # 6dp, >= threshold). At scale the broadcast side is the "index
+    # fits in executor memory" brute-force baseline — beyond that, IVF
     # (similarity.build_ivf_index) is the path.
     import numpy as np
     import pandas as pd
 
     if not allow_driver_gather:
         raise ValueError(
-            "embedding_near_dups without block_col/planes is an exact "
+            "embedding_near_dups without block_col/plane_bands is an exact "
             "all-pairs scan that gathers every vector to the driver. "
-            "Pass planes= (sign-LSH blocking) for the distributed path, "
-            "or opt in explicitly with allow_driver_gather=True."
+            "Pass plane_bands= (sign-LSH blocking) for the distributed "
+            "path, or opt in explicitly with allow_driver_gather=True."
         )
     spark = df.sparkSession
     n_rows = df.count()
-    if n_rows > max_gather_rows:
+    if n_rows > _MAX_GATHER_ROWS:
         raise ValueError(
             f"brute-force gather refused: {n_rows} rows > "
-            f"max_gather_rows={max_gather_rows}; use planes= blocking "
+            f"{_MAX_GATHER_ROWS}; use plane_bands= blocking "
             "or similarity.build_ivf_index instead"
         )
     key_sql = df.schema[key_col].dataType.simpleString()

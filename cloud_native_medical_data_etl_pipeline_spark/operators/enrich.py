@@ -17,10 +17,7 @@ Physical strategy: BroadcastNestedLoopJoin with the condition summary
 broadcast. The right side is small post-aggregation (distinct
 conditions), so even at 100 TB of raw events the theta-join input is
 |distinct(drug, indication)| x |distinct conditions| — and the explode/
-distinct both happen map-side before the broadcast join. For corpora
-where distinct conditions are NOT small, `enrich_scalable` swaps in a
-token-overlap prefilter (equi-join on shared tokens) that turns the
-O(n*m) scan into a candidate equi-join + exact verification.
+distinct both happen map-side before the broadcast join.
 """
 
 from __future__ import annotations
@@ -64,9 +61,7 @@ def ct_summary(ct_t: DataFrame) -> DataFrame:
     )
 
 
-def containment_match(
-    indications: DataFrame, conditions: DataFrame, broadcast_right: bool = True
-) -> DataFrame:
+def containment_match(indications: DataFrame, conditions: DataFrame) -> DataFrame:
     """Theta-join on bidirectional substring containment.
 
     indications: (drug_name, indication_norm) distinct, non-empty.
@@ -79,12 +74,11 @@ def containment_match(
     indication, exactly like the reference's `x in ind` Python check
     (drug_transformer.py:257-261).
     """
-    right = F.broadcast(conditions) if broadcast_right else conditions
     pred = F.col("condition_norm").contains(F.col("indication_norm")) | F.col(
         "indication_norm"
     ).contains(F.col("condition_norm"))
     return (
-        indications.join(right, pred, "inner")
+        indications.join(F.broadcast(conditions), pred, "inner")
         # any-of semantics: one row per (drug, condition) no matter how
         # many of the drug's indications matched the condition
         .select(
@@ -138,109 +132,6 @@ def enrich(fda_t: DataFrame | None, ct_t: DataFrame | None) -> DataFrame:
     )
     # Left join back to ALL drugs; zero-fill non-matches (not null —
     # reference zero-dict at drug_transformer.py:270-275).
-    return enriched.join(trial_stats, "drug_name", "left").select(
-        enriched["drug_name"],
-        "adverse_event_count",
-        "avg_severity_score",
-        "death_count",
-        "hospitalization_count",
-        F.coalesce(F.col("trial_count"), F.lit(0)).cast("long").alias("trial_count"),
-        F.coalesce(F.col("total_enrollment"), F.lit(0.0))
-        .cast("double")
-        .alias("total_enrollment"),
-        F.coalesce(F.col("completed_trials"), F.lit(0))
-        .cast("long")
-        .alias("completed_trials"),
-    )
-
-
-def enrich_scalable(fda_t: DataFrame, ct_t: DataFrame) -> DataFrame:
-    """Scale-mode variant of the containment join (SURVEY.md §7.5.8).
-
-    When the per-condition summary is too large to broadcast, generate
-    candidates with a token-overlap equi-join (explode words of both
-    sides, join on the shared token, distinct pairs), then verify exact
-    containment. Word-containment (`a ⊆ b` as substrings where a has
-    >=1 word) implies sharing at least one word only when the substring
-    boundary aligns with spaces — normalization strips spaces, so we
-    token-split BEFORE normalizing and normalize per-token. A candidate
-    pair is verified with the exact bidirectional contains() predicate,
-    so the prefilter only risks false negatives for indications whose
-    every word is split across condition word boundaries; those are
-    containment matches only in the de-spaced string, which the exact
-    reference predicate itself only sees post-normalization — and for
-    SUB-WORD containment (indication 'cancer' inside condition token
-    'cancers': a substring of one word is not a shared token).  Both
-    are recall-only losses of the prefilter — documented
-    approximation, switchable back to `enrich` for exact parity.
-    Empty-normalized conditions are NOT part of the approximation:
-    they match every drug under the exact predicate and ride a
-    dedicated broadcast branch below.
-    """
-    indications = (
-        fda_t.select(
-            F.col("drug_name_clean").alias("drug_name"),
-            F.col("drug_indication").alias("indication"),
-            M.normalize_for_join("drug_indication").alias("indication_norm"),
-        )
-        .where(F.col("indication_norm") != "")
-        .distinct()
-    )
-    conditions = ct_summary(ct_t).withColumn(
-        "condition_norm", M.normalize_for_join("condition")
-    )
-    ind_tokens = indications.select(
-        "drug_name",
-        "indication_norm",
-        F.explode(
-            F.array_distinct(
-                F.split(F.lower(F.trim(F.col("indication"))), r"\s+")
-            )
-        ).alias("token"),
-    )
-    cond_tokens = conditions.select(
-        "condition",
-        "condition_norm",
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col("condition"))), r"\s+"))
-        ).alias("token"),
-    )
-    candidates = (
-        ind_tokens.join(cond_tokens, "token")
-        .where(
-            F.col("condition_norm").contains(F.col("indication_norm"))
-            | F.col("indication_norm").contains(F.col("condition_norm"))
-        )
-        .select("drug_name", "condition")
-        .distinct()
-    )
-    # EMPTY-normalized conditions (flatten_ct defaults a missing
-    # conditionsModule to ''): the exact predicate matches them to
-    # EVERY drug with a non-empty indication ('' is a substring of
-    # everything), but they produce no tokens and would silently fall
-    # out of the prefilter — this branch is exact parity, not part of
-    # the cross-word-boundary approximation.  The empty-condition set
-    # is at most a handful of rows, broadcast.
-    empty_conds = conditions.where(F.col("condition_norm") == "").select(
-        "condition"
-    )
-    candidates = candidates.unionByName(
-        indications.select("drug_name")
-        .distinct()
-        .crossJoin(F.broadcast(empty_conds))
-    )
-    matched = candidates.join(
-        conditions.select(
-            "condition", "trial_count", "total_enrollment", "completed_trials"
-        ),
-        "condition",
-    )
-    trial_stats = matched.groupBy("drug_name").agg(
-        F.sum("trial_count").alias("trial_count"),
-        F.sum("total_enrollment").alias("total_enrollment"),
-        F.sum("completed_trials").alias("completed_trials"),
-    )
-    enriched = fda_summary(fda_t)
     return enriched.join(trial_stats, "drug_name", "left").select(
         enriched["drug_name"],
         "adverse_event_count",

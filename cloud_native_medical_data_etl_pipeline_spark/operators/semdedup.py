@@ -10,8 +10,8 @@ Pipeline (every stage is an existing scale-shaped operator):
      smallest-key vectors, the q23 IVF scheme — a real deployment
      k-means them, the mechanics are identical). One map pass.
   2. in-cell exact pairs — embedding_near_dups(block_col="cell_id"):
-     candidates come from the cell equi-join, verification is the JVM
-     zip_with cosine. Blocking by cell bounds candidate volume to
+     each cell is one verify group, scored by one GEMM per cell (the
+     operator's grouped verify). Blocking by cell bounds the work to
      sum_c(n_c^2); cross-cell near-dups are deliberately out of scope
      (that is the recall/cost dial — more cells = cheaper + lower
      recall, same trade SemDeDup makes).
@@ -81,8 +81,8 @@ def semantic_dedup_keep(
     # no broadcast hint: the loser set scales with the corpus dup rate,
     # so let AQE pick broadcast-vs-shuffle from its measured size
     out = df.select(key_col).join(losers, key_col, "left_anti")
-    # propagate the pair stage's persisted prep frame so release(out)
-    # frees it (caller-unpersists contract)
+    # propagate whatever the pair stage persisted so release(out) frees
+    # it (caller-unpersists contract)
     from .dedup import _with_cached_deps
 
     return _with_cached_deps(out, pairs)

@@ -12,8 +12,6 @@ Two tiers:
                            assign every vector to its nearest centroid
                            (one map pass), search only the nprobe
                            closest cells — the 100 TB path
-  random_hyperplane_bucket sign-LSH bucketing column for blocked
-                           near-dup / join workloads
 """
 
 from __future__ import annotations
@@ -602,21 +600,6 @@ def deterministic_hyperplanes(
 
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def random_hyperplane_bucket(
-    vec_col: Column | str, planes: list[list[float]]
-) -> Column:
-    """Sign-LSH bucket id: bit i = (v . plane_i) >= 0. With `planes`
-    fixed (derive them deterministically from any seed), equal buckets
-    group nearby vectors -> use as block_col for equi-join candidate
-    generation."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bucket = F.lit(0)
-    for i, p in enumerate(planes):
-        bit = F.when(V.dot(c, _lit_vec(p)) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
 
 
 def _py_cosine(a: list[float], b: list[float]) -> float:

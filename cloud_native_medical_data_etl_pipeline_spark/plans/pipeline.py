@@ -57,7 +57,6 @@ def run(
     clinical_trials: DataFrame | None,
     output_base: str,
     processed_ts=None,
-    validate: bool = True,
     quality_config: dict | None = None,
 ) -> RunResult:
     """Transform both inputs, enrich, write the processed partition and
@@ -96,18 +95,17 @@ def run(
         result.ct_records = ct_t.count() if ct_t is not None else 0
         result.enriched_records = enriched.count()
 
-        if validate:
-            # Quality gate runs on the union of transformed inputs (the
-            # shape the reference checker expects, data_quality.py:100-296).
-            parts = [df for df in (fda_t, ct_t) if df is not None]
-            combined = parts[0]
-            for p in parts[1:]:
-                combined = combined.unionByName(p, allowMissingColumns=True)
-            result.quality = quality.run_quality_checks(
-                combined, date, config=quality_config
-            )
-            if not result.quality["overall_passed"]:
-                result.status = "quality_failed"
+        # Quality gate runs on the union of transformed inputs (the
+        # shape the reference checker expects, data_quality.py:100-296).
+        parts = [df for df in (fda_t, ct_t) if df is not None]
+        combined = parts[0]
+        for p in parts[1:]:
+            combined = combined.unionByName(p, allowMissingColumns=True)
+        result.quality = quality.run_quality_checks(
+            combined, date, config=quality_config
+        )
+        if not result.quality["overall_passed"]:
+            result.status = "quality_failed"
         return result
     finally:
         for df in cached:

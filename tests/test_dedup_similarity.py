@@ -513,28 +513,137 @@ def test_release_unpersists_operator_caches(spark):
         assert not (_cached_ids(spark) - base)
 
 
-def test_banded_chunk_split_and_pair_verify_equivalence(spark):
-    """Hot-bucket chunking and the pairs-verify mode are physical
-    re-shapes only: a tiny chunk_cap (forces K>1 in every bucket) and
-    verify='pairs' must both emit exactly the unsplit group-GEMM pair
-    set."""
+def test_banded_chunk_split_equivalence(spark, monkeypatch):
+    """Hot-bucket chunking is a physical re-shape only: a tiny chunk
+    cap (forces K>1 in every bucket) must emit exactly the unsplit
+    group-GEMM pair set."""
     import __spark_entry__ as entry_mod
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
 
-    def run(**kw):
+    def run(cap):
+        monkeypatch.setattr(dedup, "_CHUNK_CAP", cap)
         out = dedup.embedding_near_dups(
-            emb, threshold=0.4, plane_bands=entry_mod._HP_BANDS, **kw
+            emb, threshold=0.4, plane_bands=entry_mod._HP_BANDS
         )
         rows = sorted(map(tuple, out.collect()))
         dedup.release(out)
         return rows
 
-    baseline = run(chunk_cap=None)
+    baseline = run(1 << 40)                   # the input fits: no split
     assert len(baseline) > 0
-    assert run(chunk_cap=8) == baseline      # every bucket splits
-    assert run() == baseline                 # default cap, K=1 path
-    assert run(verify="pairs") == baseline   # JVM per-pair verification
+    assert run(8) == baseline                 # every bucket splits
+    assert run(40) == baseline                # mean occupancy ~31: hot ones split
+
+
+def _brute_force_pairs(vecs, buckets, threshold):
+    """{(key_a, key_b): cosine} over every pair sharing a bucket,
+    scored pair by pair in Python with the operator's rounding; pairs
+    with an undefined cosine (NULL vector, NULL element, zero norm)
+    are skipped."""
+    import math
+
+    out = {}
+    for ka, va in vecs.items():
+        for kb, vb in vecs.items():
+            if not ka < kb or not buckets[ka] & buckets[kb]:
+                continue
+            if va is None or vb is None or None in va or None in vb:
+                continue
+            na = math.sqrt(sum(x * x for x in va))
+            nb = math.sqrt(sum(x * x for x in vb))
+            if na == 0 or nb == 0:
+                continue
+            cos = round(sum(x * y for x, y in zip(va, vb)) / (na * nb), 6)
+            if cos >= threshold:
+                out[(ka, kb)] = cos
+    return out
+
+
+def test_grouped_verify_matches_brute_force(spark, monkeypatch):
+    """The grouped-GEMM verifier, through both bucketings (block column
+    and banded sign-LSH) and with the hot-bucket chunk split forced by
+    a tiny _CHUNK_CAP, emits exactly the brute-force pair set: NULL
+    block values, NULL vectors, NULL elements and zero vectors never
+    pair, and string keys order like Python strings."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(7)
+
+    def near(axis):
+        v = [rng.uniform(-0.01, 0.01) for _ in range(4)]
+        v[axis] += 1.0
+        return v
+
+    rows = (
+        [(f"a{i}", near(0), 1 if i < 4 else 2) for i in range(7)]
+        + [(f"b{i}", near(1), 3) for i in range(5)]
+        + [
+            ("c0", near(0), None),                # NULL block values
+            ("c1", near(0), None),
+            ("n0", None, 1),                      # NULL vector
+            ("e0", [1.0, None, 0.0, 0.0], 1),     # NULL element
+            ("z0", [0.0] * 4, 1),                 # zero norm
+            ("z1", [0.0] * 4, 3),
+        ]
+    )
+    df = spark.createDataFrame(
+        rows, "vec_id string, embedding array<float>, blk int"
+    )
+    # the column is array<float>: score what Spark stores
+    vecs = {
+        k: None
+        if v is None
+        else [None if x is None else float(np.float32(x)) for x in v]
+        for k, v, _ in rows
+    }
+    planes = [
+        similarity.deterministic_hyperplanes(4, n_planes=2, seed=40 + b)
+        for b in range(3)
+    ]
+
+    def band_buckets(v):
+        if v is None or None in v:
+            return set()
+        return {
+            f"{b}#"
+            + str(
+                sum(
+                    1 << i
+                    for i, p in enumerate(band)
+                    if sum(x * y for x, y in zip(v, p)) >= 0
+                )
+            )
+            for b, band in enumerate(planes)
+        }
+
+    cases = [
+        (
+            dict(block_col="blk"),
+            {k: set() if blk is None else {blk} for k, _, blk in rows},
+        ),
+        (dict(plane_bands=planes), {k: band_buckets(vecs[k]) for k in vecs}),
+    ]
+    default_cap = dedup._CHUNK_CAP
+    for kw, buckets in cases:
+        want = _brute_force_pairs(vecs, buckets, 0.98)
+        assert want, kw
+        # the default cap exceeds the input (no split); 2 is below the
+        # occupancy of every bucket holding a pair, so those all split
+        for cap in (default_cap, 2):
+            monkeypatch.setattr(dedup, "_CHUNK_CAP", cap)
+            out = dedup.embedding_near_dups(df, threshold=0.98, **kw)
+            rows_out = out.collect()
+            dedup.release(out)
+            got = {(r["key_a"], r["key_b"]): r["cosine"] for r in rows_out}
+            assert len(got) == len(rows_out), (kw, cap)  # each pair once
+            assert got.keys() == want.keys(), (kw, cap)
+            for p, cos in want.items():
+                assert abs(got[p] - cos) <= 1e-6, (kw, cap, p)
+    with pytest.raises(ValueError, match="not both"):
+        dedup.embedding_near_dups(df, block_col="blk", plane_bands=planes)
 
 
 # ---------------------------------------------------------------------------
@@ -609,18 +718,6 @@ def test_centroid_outlier_flags_planted_outlier(spark):
     assert min(out[1], out[2], out[3]) > 0.9
     assert out[4] == min(out.values()) and out[4] < 0.0
     assert out[5] == 1.0
-
-
-def test_embedding_near_dups_rejects_bad_verify(spark):
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1])], "vec_id long, embedding array<float>"
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="verify"):
-        dedup.embedding_near_dups(
-            df, threshold=0.5, plane_bands=[[[1.0, 0.0]]], verify="pair"
-        ).count()
 
 
 def test_cosine_topk_batch_matches_single_query_loop(spark):
@@ -1125,8 +1222,7 @@ def test_minhash_arrow_equals_sql_on_unicode_edge_whitespace(spark):
 
 
 def test_embedding_near_dups_string_keys_group_verify(spark):
-    """The banded group-verify path must accept non-integer keys (the
-    block_col and verify='pairs' paths always did)."""
+    """The banded group-verify path must accept non-integer keys."""
     rows = [
         ("doc-a", [1.0, 0.0, 0.0, 0.0]),
         ("doc-b", [1.0, 0.001, 0.0, 0.0]),
