@@ -61,6 +61,20 @@ def _plan_size_bytes_raw(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
+def _plan_has_exchange(df: DataFrame) -> bool:
+    """True when ``df``'s physical plan contains a shuffle or broadcast
+    exchange. Plans the frame without executing it (under AQE the
+    executed plan is the not-yet-run adaptive plan). Same private py4j
+    bridge as :func:`_plan_size_bytes`: a failed probe reports no
+    exchange, which keeps the partition-count gate."""
+    from py4j.protocol import Py4JError
+
+    try:
+        return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+    except Py4JError:
+        return False
+
+
 def rebalance_for_cpu(df: DataFrame, persist: bool = True) -> DataFrame:
     """Spread CPU-bound per-row kernels across all cores — but only
     when the input is big enough for parallelism to pay.
@@ -127,7 +141,15 @@ def repartition_key_for_cpu(df: DataFrame, cols: list[Column]) -> DataFrame:
     the shuffle is big enough for that to be the right call; inputs
     below the 128 KiB stats floor (unit tests) stay put so tiny plans
     don't pay a 32-task exchange.
+
+    Only scan-rooted inputs are considered: an input whose physical
+    plan already has an Exchange (an aggregate, a join, a repartition)
+    returns unchanged. Counting its partitions would build its RDD,
+    which under AQE executes the upstream shuffle stages while the
+    caller is still composing the plan, so they would run twice.
     """
+    if _plan_has_exchange(df):
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

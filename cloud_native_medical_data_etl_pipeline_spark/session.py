@@ -4,6 +4,15 @@ Defaults are chosen for the 100 TB design point but work unchanged on
 local[N]: AQE on (runtime coalescing, broadcast-join conversion, skew
 splitting), Arrow on for any pandas interchange, and a shuffle
 partition count that AQE can shrink at runtime.
+
+The driver JVM also gets a compile budget for short-lived daily runs
+(one JVM per day): a whole-stage-codegen class cache larger than a
+day's working set, so a re-run of the same plan shapes reuses its
+compiled classes, and HotSpot's C2 tier deferred for code that is warm
+but not hot. Both take effect only when this factory launches the JVM;
+a driver started by spark-submit in cluster mode or from a pod spec
+needs the same settings on its own command line (SCALING.md, "Driver
+JVM compile budget").
 """
 
 from __future__ import annotations
@@ -11,6 +20,27 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# One daily pipeline run generates ~106 distinct whole-stage-codegen
+# classes; Spark's default cache of 100 makes the LRU evict them within
+# a run, so every later run Janino-compiles (and the JIT recompiles)
+# 50-80 of them again. 2000 holds a day's plans many times over, with
+# room for the other operators sharing a long-lived session.
+_CODEGEN_CACHE_ENTRIES = 2000
+
+# HotSpot tier-4 (C2) invocation thresholds at ~10x their defaults
+# (5000 / 600 / 15000): a daily job's planner and codegen'd operators
+# run hundreds to thousands of times, enough to make C2 compile them
+# at the defaults but not to pay it back within one job. The back-edge
+# threshold stays at its default so hot data-plane loops still reach
+# C2 through on-stack replacement (raising it too made a 150k-event
+# day's first job 20 % slower); C1-only (TieredStopAtLevel=1) is not
+# used because it slowed steady-state curation jobs by half.
+_DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000"
+    " -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=60000"
+)
 
 
 def get_spark(
@@ -59,6 +89,11 @@ def get_spark(
             os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/spark-warehouse"),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        # defaultJavaOptions, not extraJavaOptions: callers pass their
+        # own extraJavaOptions (tmpdir, perf data), which would replace
+        # these; Spark puts both on the driver's command line
+        .config("spark.driver.defaultJavaOptions", _DRIVER_JIT_OPTIONS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -344,6 +344,41 @@ def test_followup_stats_rejects_reserved_columns(spark):
         )
 
 
+def test_keyed_operators_over_aggregated_input_run_no_job(spark):
+    """Building followup_stats / sessionize over an input that already
+    shuffles must not execute it: repartition_key_for_cpu used to count
+    the input's partitions through df.rdd, which under AQE runs the
+    upstream shuffle stages at plan-build time (and the caller's action
+    runs them again). The results must still be right."""
+    ev = _typed_events(
+        spark,
+        [
+            (1, _ts(0), 1, "a"),
+            (1, _ts(0), 2, "a"),
+            (1, _ts(2), 3, "b"),
+            (1, _ts(50), 4, "a"),
+            (2, _ts(1), 5, "a"),
+        ],
+    )
+    # one row per (user, ts): an aggregate, so the plan has an Exchange
+    agg = ev.groupBy("user_id", "ts").agg(F.min("event_id").alias("event_id"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    fu = joins.followup_stats(agg, on="user_id", lo_s=0.0, hi_s=300.0)
+    sess = sessions.sessionize(agg, gap_minutes=30)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup()) - before == set()
+
+    assert {r["event_id"]: r["fu_count"] for r in fu.collect()} == {
+        1: 1, 3: 0, 4: 0, 5: 0,
+    }
+    assert {r["event_id"]: r["session_id"] for r in sess.collect()} == {
+        1: 1, 3: 1, 4: 2, 5: 1,
+    }
+
+
 # ------------------------------------------------------- range lookup
 def _tier_dim(spark):
     return spark.createDataFrame(

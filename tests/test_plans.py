@@ -12,6 +12,11 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+# bench scale for the plan pins whose gates fire only above the stats
+# floor; defaults to the sf0.1 sibling of SF_DIR
+BENCH_SF_DIR = os.environ.get(
+    "BENCH_SF_DIR", os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+)
 
 
 def _executed_plan(df) -> str:
@@ -610,7 +615,7 @@ def test_q37_followups_pins_window_parallelism_at_scale(spark):
     no-ops and the plan keeps the plain exchange
     (test_q37_followups_no_join_no_pair_rows covers that shape).
     Plan-only: nothing is executed."""
-    df = entry_mod.queries()["q37_event_followups"](spark, "/root/testdata/sf0.1")
+    df = entry_mod.queries()["q37_event_followups"](spark, BENCH_SF_DIR)
     plan = _final_plan(df)
     assert "REPARTITION_BY_NUM" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
@@ -625,7 +630,7 @@ def test_q30_sessionize_pins_window_parallelism_at_scale(spark):
     0.53-0.64 s). hash(user_id) satisfies both window specs and the
     (user_id, session_id) aggregate, so the exchange count stays 1 on
     the session path. Plan-only: nothing is executed."""
-    df = entry_mod.queries()["q30_session_stats"](spark, "/root/testdata/sf0.1")
+    df = entry_mod.queries()["q30_session_stats"](spark, BENCH_SF_DIR)
     plan = _final_plan(df)
     assert "REPARTITION_BY_NUM" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
@@ -644,7 +649,7 @@ def test_q15_rebalances_kernels_at_scale(spark):
         release,
     )
 
-    df = entry_mod.queries()["q15_text_stats"](spark, "/root/testdata/sf0.1")
+    df = entry_mod.queries()["q15_text_stats"](spark, BENCH_SF_DIR)
     plan = _executed_plan(df)
     assert "RoundRobinPartitioning" in plan, plan
     assert "InMemoryRelation" in plan, plan
